@@ -32,12 +32,12 @@ PLAN_DIR = os.environ.get("PLAN_DIR", "plans/r06")
 
 
 def _session():
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # build_session takes local[SPARK_GRAFT_CPUS] (default: the cores this
+    # process may use) and that many shuffle partitions unless overridden
+    shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
     spark = build_session(
-        app_name="bench-extra", master=f"local[{cpus}]",
-        shuffle_partitions=int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
-        ),
+        app_name="bench-extra",
+        shuffle_partitions=int(shuffle) if shuffle else None,
     )
     spark.sparkContext.setLogLevel("ERROR")
     return spark

@@ -75,6 +75,16 @@ def explain_str(df: DataFrame, mode: str = "formatted") -> str:
         return buf.getvalue()
 
 
+def _codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes (whole-stage and expression codegen) this JVM has
+    compiled so far; Spark's CodegenMetrics timer counts one per compile."""
+    jvm = spark._jvm  # noqa: SLF001
+    return int(
+        jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME().getCount()
+    )
+
+
 def _checkpointed(
     spark: SparkSession,
     path: str,
@@ -88,12 +98,15 @@ def _checkpointed(
     Row count rides on the write via observe() — no extra job, no re-read;
     the partition count comes from the committed files. Every post-write
     action here is driver-serial at any cluster size, so it must stay O(1).
+    `codegen_compiles` counts the classes the stage compiled: near 0 on a
+    warm call while the session's codegen cache holds the engine's plans.
     """
     t0 = time.time()
     if resume and _done(path):
         df = spark.read.parquet(path)
         metrics.append({"stage": stage, "metric": "resumed", "value": 1.0})
         return df
+    compiles0 = _codegen_compiles(spark)
     from pyspark.sql import Observation
 
     built = build()
@@ -114,6 +127,10 @@ def _checkpointed(
     elapsed = time.time() - t0
     n_files = sum(1 for f in os.listdir(path) if f.startswith("part-"))
     metrics.append({"stage": stage, "metric": "seconds", "value": elapsed})
+    metrics.append(
+        {"stage": stage, "metric": "codegen_compiles",
+         "value": float(_codegen_compiles(spark) - compiles0)}
+    )
     metrics.append({"stage": stage, "metric": "rows", "value": float(n_rows)})
     metrics.append(
         {"stage": stage, "metric": "partitions", "value": float(n_files)}
@@ -214,6 +231,31 @@ def _fanout_small_input(spark: SparkSession, pages: DataFrame) -> DataFrame:
     if n_groups >= par:
         return pages
     return pages.repartition(par)
+
+
+def _record_stats(metrics: list[dict], stage: str, stats: dict) -> None:
+    """One (stage, metric, value) row per entry of an operator stats dict."""
+    for k, v in stats.items():
+        metrics.append({"stage": stage, "metric": k, "value": float(v)})
+
+
+def _footer_rows(path: str, limit: int) -> int | None:
+    """Row count of a committed parquet table from its file footers
+    (metadata-only). Stops reading once the count passes `limit`, so a huge
+    table costs only the footers needed to rule out the small-input tier;
+    None when the footers cannot be read."""
+    import pyarrow.parquet as pq
+
+    n = 0
+    try:
+        for f in sorted(os.listdir(path)):
+            if f.startswith("part-") and f.endswith(".parquet"):
+                n += pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
+                if n > limit:
+                    break
+    except (OSError, ValueError):  # unreadable footer: tier is skipped
+        return None
+    return n
 
 
 def partition_histogram(df: DataFrame) -> DataFrame:
@@ -393,13 +435,9 @@ def run_dedup_pipeline(
     def build_pairs() -> DataFrame:
         pair_stats: dict = {}
         out = pairs_stage(signatures, cfg, pair_stats)
-        # A5 hot-bucket report: skew-tier counts from the band self-join
-        for k in ("hot_buckets", "hot_bucket_rows", "warm_buckets"):
-            if k in pair_stats:
-                metrics.append(
-                    {"stage": "pairs", "metric": k,
-                     "value": float(pair_stats[k])}
-                )
+        # A5 hot-bucket report (skew-tier counts from the band self-join)
+        # plus the full-band short-circuit count
+        _record_stats(metrics, "pairs", pair_stats)
         return out
 
     pairs = _checkpointed(
@@ -424,8 +462,8 @@ def run_dedup_pipeline(
         )
         # the pairs commit already measured its row count — hand it to CC so
         # small graphs take the one-task union-find tier instead of serial
-        # star rounds (components.py; falls back to distributed rounds on
-        # resume, where the count row is absent)
+        # star rounds (components.py); a resumed pairs stage has no count
+        # row, so read it from the committed table's parquet footers
         n_pairs = next(
             (
                 int(m["value"]) for m in metrics
@@ -433,19 +471,25 @@ def run_dedup_pipeline(
             ),
             None,
         )
+        if n_pairs is None:
+            n_pairs = _footer_rows(p("pairs"), cfg.cc_single_task_edges)
         rep_clusters = connected_components(
             edges, vertices=signatures.select(F.xxhash64("url").alias("uid")),
             src="uid_a", dst="uid_b", vertex_col="uid", stats=cc_stats,
             known_edge_count=n_pairs,
             single_task_edges=cfg.cc_single_task_edges,
         )
-        metrics.append(
-            {
-                "stage": "clusters",
-                "metric": "cc_rounds",
-                "value": float(cc_stats.get("rounds", 0)),
-            }
+        _record_stats(
+            metrics, "clusters", {f"cc_{k}": v for k, v in cc_stats.items()}
         )
+        # partial star edges only over-split, so a non-converged run would
+        # commit keepers for clusters that are really one: fail before the
+        # clusters commit instead
+        if not cc_stats["converged"]:
+            raise RuntimeError(
+                f"connected components did not converge in "
+                f"{cc_stats['rounds']} rounds; clusters not committed"
+            )
         # Per-representative min distance / max score, aggregated at REP
         # level (uid-keyed, rep-count-sized shuffles) before the corpus
         # fan-out — the actions stage then needs zero joins, only its

@@ -166,6 +166,13 @@ def test_resume_skips_completed_stages_and_is_identical(spark, pages, ckpt):
         for r in out2["metrics"].where("metric = 'resumed'").collect()
     }
     assert {"pages_meta", "signatures", "pairs"} <= resumed
+    # the resumed pairs stage has no in-memory row count; it comes from the
+    # committed table's footers, so components keeps the one-task tier
+    cc = {
+        r["metric"]: r["value"]
+        for r in out2["metrics"].where("stage = 'clusters'").collect()
+    }
+    assert cc["cc_single_task"] == 1.0 and cc["cc_rounds"] == 0
 
 
 def test_dup_pair_recall_on_golden_corpus(spark, pages, ckpt):
@@ -203,8 +210,93 @@ def test_dup_pair_recall_on_golden_corpus(spark, pages, ckpt):
 
 def test_metrics_emitted(spark, pages, ckpt):
     out = run(spark, pages, ckpt)
-    stages = {r["stage"] for r in out["metrics"].collect()}
+    m = {(r["stage"], r["metric"]): r["value"] for r in out["metrics"].collect()}
+    stages = {s for s, _ in m}
     assert {"pages_meta", "signatures", "pairs", "clusters", "actions"} <= stages
+    # operator stats dicts are copied in full, not whitelisted
+    assert m[("pairs", "full_band_pairs")] > 0  # exact copies share all bands
+    assert m[("clusters", "cc_rounds")] == 0
+    assert m[("clusters", "cc_converged")] == 1.0
+    assert m[("clusters", "cc_single_task")] == 1.0
+    for stage in ("pages_meta", "signatures", "pairs", "clusters", "actions"):
+        assert m[(stage, "codegen_compiles")] >= 0
+
+
+def _clear_codegen_cache(spark):
+    """Empty Spark's JVM-wide generated-code cache (a private field of
+    CodeGenerator), so the next call compiles its full class set."""
+    cls = spark._jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$"
+    )
+    field = cls.getDeclaredField("cache")
+    field.setAccessible(True)
+    field.get(cls.getField("MODULE$").get(None)).invalidateAll()
+
+
+def test_warm_call_reuses_generated_code(spark, pages, tmp_path):
+    """A repeated pipeline call finds its whole-stage-codegen classes in the
+    session's codegen cache instead of recompiling them: the cache must hold
+    the engine's per-call plan working set (session.build_session)."""
+    def compiles(out):
+        return sum(
+            r["value"] for r in
+            out["metrics"].where("metric = 'codegen_compiles'").collect()
+        )
+
+    _clear_codegen_cache(spark)
+    first = compiles(run(spark, pages, str(tmp_path / "first")))
+    second = compiles(run(spark, pages, str(tmp_path / "second")))
+    assert first >= 50, first  # the cold call compiled its plans
+    assert second <= 0.1 * first, (first, second)
+
+
+def _chain_pages(spark, n_docs=30, words=200, shift=15):
+    """Docs that are sliding windows over one random word stream: each doc
+    is a near-duplicate of its neighbours but not of docs far along the
+    chain, so the pair graph is one long path-like component."""
+    import datetime
+    import random
+
+    rng = random.Random(7)
+    vocab = [
+        "".join(rng.choice("bcdfghjklmnpqrstvwz") + rng.choice("aeiou")
+                for _ in range(rng.randint(2, 4)))
+        for _ in range(3000)
+    ]
+    stream = [rng.choice(vocab) for _ in range(n_docs * shift + words)]
+    ts = datetime.datetime(2024, 1, 1)
+    rows = [
+        (f"https://chain.example/{i}", ts,
+         " ".join(stream[i * shift:i * shift + words]), "en")
+        for i in range(n_docs)
+    ]
+    return spark.createDataFrame(
+        rows, "url string, warc_ts timestamp, text string, lang string"
+    )
+
+
+def test_components_non_convergence_fails_before_commit(
+    spark, ckpt, monkeypatch
+):
+    """Partial component stars only over-split, so a run whose components
+    did not converge must fail rather than commit clusters and actions."""
+    from py_image_dedup_spark.plans import pipeline
+
+    real = pipeline.connected_components
+
+    def one_round(*args, **kwargs):
+        # force the distributed rounds and cut them off after one; the
+        # partition-local pre-pass is off because on a one-partition pair
+        # table it alone would yield exact stars
+        kwargs.update(max_iterations=1, known_edge_count=None,
+                      local_contract=False)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "connected_components", one_round)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        run(spark, _chain_pages(spark), ckpt)
+    assert os.path.exists(os.path.join(ckpt, "pairs", "_SUCCESS"))
+    assert not os.path.exists(os.path.join(ckpt, "clusters", "_SUCCESS"))
 
 
 def test_resume_invalidated_on_config_change(spark, pages, ckpt):
